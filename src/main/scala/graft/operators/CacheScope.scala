@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.GraftSession
+
 /** Action-scoped persist() for operator paths.
   *
   * Query builders persist shared subtrees (baskets read three ways,
@@ -21,77 +23,39 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object CacheScope {
 
-  private val pending =
-    new java.util.concurrent.ConcurrentHashMap[
-      SparkSession, java.util.Queue[DataFrame]]()
-  private val installed =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-
   /** Persist `df` until the next action on its session completes. */
   def scoped(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
+    val gs = GraftSession(spark)
     df.persist()
-    if (installed.add(spark)) {
-      spark.listenerManager.register(new QueryExecutionListener {
-        override def onSuccess(
-            funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-          drain(spark)
-        override def onFailure(
-            funcName: String, qe: QueryExecution, error: Exception): Unit =
-          drain(spark)
-      })
-    }
-    pending
-      .computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]())
-      .add(df)
+    if (gs.scopeListener.compareAndSet(false, true))
+      spark.listenerManager.register(Unpersist)
+    gs.scoped.add(df)
     df
   }
 
+  /** One listener for every session, reading the session from the
+    * finished query: it holds no session, so registering it on one
+    * keeps that session collectable. */
+  private object Unpersist extends QueryExecutionListener {
+    override def onSuccess(
+        funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      drain(qe.sparkSession)
+    override def onFailure(
+        funcName: String, qe: QueryExecution, error: Exception): Unit =
+      drain(qe.sparkSession)
+  }
+
   private def drain(spark: SparkSession): Unit = {
-    val q = pending.get(spark)
-    if (q != null) {
-      var df = q.poll()
-      while (df != null) {
-        df.unpersist(blocking = false)
-        df = q.poll()
-      }
+    val q = GraftSession(spark).scoped
+    var df = q.poll()
+    while (df != null) {
+      df.unpersist(blocking = false)
+      df = q.poll()
     }
   }
 
   /** True iff nothing is awaiting unpersist for `spark` (test hook). */
-  def pendingEmpty(spark: SparkSession): Boolean = {
-    val q = pending.get(spark)
-    q == null || q.isEmpty
-  }
-}
-
-/** Named-model cache registry: the persisted model frames behind
-  * `graft_model_<name>` temp views are CATALOG STATE (train once,
-  * score many by name) — deliberately cached until GRAFT DROP. This
-  * registry holds the handles so the drop statement can release the
-  * cache entry along with the view. Weakly keyed per session. */
-object ModelCache {
-  private val models = new java.util.WeakHashMap[
-    SparkSession,
-    scala.collection.concurrent.TrieMap[String, DataFrame]]()
-
-  private def map(spark: SparkSession) = models.synchronized {
-    var m = models.get(spark)
-    if (m == null) {
-      m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-      models.put(spark, m)
-    }
-    m
-  }
-
-  /** Register (replace-on-create: the prior model's cache is freed). */
-  def put(spark: SparkSession, name: String, model: DataFrame): Unit =
-    map(spark).put(name, model)
-      .foreach(_.unpersist(blocking = false))
-
-  /** Release the named model's cache entry (if registered). */
-  def drop(spark: SparkSession, name: String): Unit =
-    map(spark).remove(name).foreach(_.unpersist(blocking = false))
+  def pendingEmpty(spark: SparkSession): Boolean =
+    GraftSession(spark).scoped.isEmpty
 }

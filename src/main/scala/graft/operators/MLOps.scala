@@ -274,6 +274,8 @@ object MLOps {
     // deterministic here
     val nd = data.agg(count(lit(1)), first(size(col("x")))).head
     val n = nd.getLong(0).toDouble
+    if (n == 0) data.unpersist(blocking = false)
+    require(n > 0, "logisticTrain: no training rows")
     val dims = nd.getInt(1)
     var w = Array.fill(dims)(0.0)
     var b = 0.0

@@ -44,6 +44,8 @@ object QuantileOps {
   def percentileDisc(df: DataFrame, groupCol: String, valueCol: String,
       ps: Seq[(String, Double)], buckets: Int = 1024): DataFrame = {
     require(ps.nonEmpty && buckets >= 2)
+    require(ps.forall { case (_, p) => p > 0 && p <= 1 },
+      s"percentileDisc: every p must lie in (0, 1], got ${ps.map(_._2)}")
     val g = col(groupCol)
     val v = col(valueCol)
 

@@ -1085,7 +1085,7 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
     // cast to the PRE-image schema before the union: unionByName's
     // set-op widening would otherwise let a BIGINT source silently
     // widen an INT table, drifting the live schema away from the
-    // declared TableMeta (the CTAS lane casts the same way)
+    // declared table defs (the CTAS lane casts the same way)
     val cast = rows.select(t.schema.fields.map(f =>
       col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
     t.unionByName(cast).createOrReplaceTempView(table)
@@ -1150,8 +1150,8 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
     * (reference tableKeys: column-level PRIMARY KEY / REFERENCES,
     * table-level PRIMARY KEY (a, b) / FOREIGN KEY (c) REFERENCES). */
   private def parseColumnDefs(items: Seq[String])
-      : Seq[graft.sources.TableMeta.ColumnDef] = {
-    import graft.sources.TableMeta.ColumnDef
+      : Seq[graft.GraftSession.ColumnDef] = {
+    import graft.GraftSession.ColumnDef
     val colsB = Seq.newBuilder[ColumnDef]
     var pkCols = Set.empty[String]
     var fks = Map.empty[String, String]
@@ -1279,7 +1279,7 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
     case ListIndexesRe() =>
       val s = spark()
       import org.apache.spark.sql.functions.{array, explode, lit, struct}
-      val ds = graft.sources.IndexRegistry.list(s)
+      val ds = graft.GraftSession(s).indexes.list
       val rows = ds.map { d =>
         struct(lit(d.name).as("index_name"), lit(d.kind).as("kind"),
           lit(d.target).as("target"), lit(d.keyCol).as("key"))
@@ -1509,7 +1509,6 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
           .centroids(s.table(table), target).persist()
         model.count() // train NOW: scoring must not re-run training
         model.createOrReplaceTempView(s"graft_model_$name")
-        graft.operators.ModelCache.put(s, name, model)
         Seq(name, "classifier", "trained")
       }
     case CreateClustererRe(name, k, iters, table) =>
@@ -1518,7 +1517,6 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
         val model = graft.operators.MLOps
           .kmeansModel(s.table(table), k.toInt, iters.toInt)
         model.createOrReplaceTempView(s"graft_model_$name")
-        graft.operators.ModelCache.put(s, name, model)
         Seq(name, "clusterer", "trained")
       }
     case CreateRecommenderRe(name, userCol, itemCol, iters, table) =>
@@ -1544,7 +1542,6 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
           .persist()
         model.count() // train NOW: scoring must not re-run the ALS
         model.createOrReplaceTempView(s"graft_model_$name")
-        graft.operators.ModelCache.put(s, name, model)
         Seq(name, "recommender", "trained")
       }
     case RecommendRe(name, userId, k) =>
@@ -1566,9 +1563,8 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
     case DropModelRe(name) =>
       GraftStatementCommand.status("DROP MODEL",
         Seq("model", "status")) { s =>
+        // dropping the view releases the model's cache entry
         s.catalog.dropTempView(s"graft_model_$name")
-        // release the model's cache entry with its catalog object
-        graft.operators.ModelCache.drop(s, name)
         Seq(name, "dropped")
       }
     case ClassifiedWithRe(table, name) =>
@@ -1715,8 +1711,8 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
         s.read.parquet(root).createOrReplaceTempView(name)
         graft.sources.ExternalLocations.register(name,
           graft.sources.ParquetLocation(root))
-        graft.sources.TableMeta.put(s,
-          graft.sources.TableMeta.TableDef(name, defs))
+        graft.GraftSession(s).tableDefs.put(
+          graft.GraftSession.TableDef(name, defs))
         Seq(name, defs.size.toString, "created")
       }
 
@@ -1726,10 +1722,10 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
       // declared tables render their key metadata (reference
       // DescribeObject over Table keys); undeclared ones fall back
       // to the live schema with no key roles
-      val cols = graft.sources.TableMeta.get(s, name)
+      val cols = graft.GraftSession(s).tableDefs.get(name)
         .map(_.columns)
         .getOrElse(s.table(name).schema.fields.toSeq.map(f =>
-          graft.sources.TableMeta.ColumnDef(
+          graft.GraftSession.ColumnDef(
             f.name, f.dataType.sql, "")))
       s.range(1).select(explode(array(cols.map(c =>
           struct(lit(c.name).as("column"), lit(c.typeDdl).as("type"),
@@ -1747,7 +1743,7 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
           cached.createOrReplaceTempView(name)
           // a previous declared-schema table of this name is gone —
           // stale key metadata must not survive the replace
-          graft.sources.TableMeta.drop(s, name)
+          graft.GraftSession(s).tableDefs.drop(name)
           Seq(name, "true", "created")
         }
       else
@@ -1765,16 +1761,17 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
           // reads it, and SAVE CATALOG persists the definition
           graft.sources.ExternalLocations.register(name,
             graft.sources.ParquetLocation(root))
-          graft.sources.TableMeta.drop(s, name) // no stale key metadata
+          // no stale key metadata
+          graft.GraftSession(s).tableDefs.drop(name)
           Seq(name, "false", root, "created")
         }
     case DropTableRe(name) =>
       GraftStatementCommand.status("DROP TABLE",
         Seq("table", "status")) { s =>
         // kind guard: a GRAFT CREATE VIEW name is not a table —
-        // dropping it here would orphan its SessionViews entry
+        // dropping it here would orphan its registered view
         // (phantom in LIST VIEWS whose reads fail)
-        val isView = graft.sources.SessionViews.listViews(s)
+        val isView = graft.GraftSession(s).views.list
           .exists(_.name.equalsIgnoreCase(name))
         if (isView) Seq(name, "not_a_table")
         else {
@@ -1782,10 +1779,10 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
           if (hadView) s.catalog.dropTempView(name)
           // a GRAFT ADD TABLE registration under this name must go
           // too, or LIST TABLES keeps a phantom row whose reads fail
-          graft.sources.SessionViews.dropTable(s, name)
+          graft.GraftSession(s).addedTables.drop(name)
           // declared-schema metadata (CREATE TABLE with col defs)
           // goes with its table
-          graft.sources.TableMeta.drop(s, name)
+          graft.GraftSession(s).tableDefs.drop(name)
           graft.sources.ExternalLocations.get(name) match {
             case Some(graft.sources.ParquetLocation(p))
                 if p.contains("/graft_tables/") =>
@@ -1805,25 +1802,25 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
       // a declared table's content parquet registers under the table's
       // own name (durability); that location is a storage detail, not
       // a separate object — suppress it from the listing
-      val declaredNames = graft.sources.TableMeta.list(s)
+      val declaredNames = graft.GraftSession(s).tableDefs.list
         .map(_.name.toLowerCase).toSet
       val objs: Seq[(String, String)] =
         graft.sources.ExternalLocations.names.sorted
           .filterNot(n => declaredNames.contains(n.toLowerCase))
           .map("location" -> _) ++
-        graft.sources.SessionViews.listViews(s)
+        graft.GraftSession(s).views.list
           .map(v => "view" -> v.name) ++
-        graft.sources.SessionViews.listTables(s)
+        graft.GraftSession(s).addedTables.list
           .map(t => "table" -> t.name) ++
         // explicitly declared tables (CREATE TABLE with col defs)
-        graft.sources.TableMeta.list(s)
+        graft.GraftSession(s).tableDefs.list
           .map(t => "table" -> t.name) ++
         s.catalog.listTables().collect().map(_.name)
           .filter(_.startsWith("graft_model_"))
           .map(n => "model" -> n.stripPrefix("graft_model_")).sorted ++
         graft.functions.ExternalFunctions.list(s)
           .map(f => "function" -> f._1) ++
-        graft.sources.IndexRegistry.list(s)
+        graft.GraftSession(s).indexes.list
           .map(d => "index" -> d.name)
       val kept = objs.distinct
         .filter { case (_, n) => n.toLowerCase.startsWith(pre) }
@@ -1861,9 +1858,9 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
         org.apache.spark.sql.GraftBridge
           .ofRows(s, parsePlan(storedDef))
           .createOrReplaceTempView(name)
-        graft.sources.SessionViews.putView(s,
-          graft.sources.SessionViews.ViewDef(name, storedDef, temp))
-        graft.sources.TableMeta.drop(s, name) // no stale key metadata
+        val gs = graft.GraftSession(s)
+        gs.views.put(graft.GraftSession.ViewDef(name, storedDef, temp))
+        gs.tableDefs.drop(name) // no stale key metadata
         Seq(name, temp.toString, "created")
       }
     case DropViewRe(name) =>
@@ -1871,7 +1868,7 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
         Seq("view", "status")) { s =>
         // kind guard (mirror of DropTableRe): CTAS tables and ADD
         // TABLE registrations are not views
-        val isTable = graft.sources.SessionViews.listTables(s)
+        val isTable = graft.GraftSession(s).addedTables.list
           .exists(_.name.equalsIgnoreCase(name)) ||
           graft.sources.ExternalLocations.get(name).exists {
             case graft.sources.ParquetLocation(p) =>
@@ -1880,7 +1877,7 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
           }
         if (isTable) Seq(name, "not_a_view")
         else {
-          val known = graft.sources.SessionViews.dropView(s, name)
+          val known = graft.GraftSession(s).views.drop(name)
           if (known) s.catalog.dropTempView(name)
           Seq(name, if (known) "dropped" else "absent")
         }
@@ -1889,7 +1886,7 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
       val s = spark()
       import org.apache.spark.sql.functions.{array, explode, lit, struct}
       val long = fmt.equalsIgnoreCase("DESCRIBE")
-      val vs = graft.sources.SessionViews.listViews(s)
+      val vs = graft.GraftSession(s).views.list
       val rows = vs.map { v =>
         if (long)
           struct(lit(v.name).as("view"), lit(v.temp).as("temp"),
@@ -1911,16 +1908,16 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
         Seq("table", "catalog", "remote", "status")) { s =>
         graft.sources.FederatedPushdown.table(s, catalog, table)
           .createOrReplaceTempView(name)
-        graft.sources.SessionViews.putTable(s,
-          graft.sources.SessionViews.AddedTable(name, catalog,
-            table.toUpperCase))
-        graft.sources.TableMeta.drop(s, name) // no stale key metadata
+        val gs = graft.GraftSession(s)
+        gs.addedTables.put(graft.GraftSession.AddedTable(name, catalog,
+          table.toUpperCase))
+        gs.tableDefs.drop(name) // no stale key metadata
         Seq(name, catalog, table.toUpperCase, "added")
       }
     case RemoveTableRe(name) =>
       GraftStatementCommand.status("REMOVE TABLE",
         Seq("table", "status")) { s =>
-        val known = graft.sources.SessionViews.dropTable(s, name)
+        val known = graft.GraftSession(s).addedTables.drop(name)
         if (known) s.catalog.dropTempView(name)
         Seq(name, if (known) "removed" else "absent")
       }
@@ -1928,7 +1925,7 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
       val s = spark()
       import org.apache.spark.sql.functions.{array, explode, lit, struct}
       val long = fmt.equalsIgnoreCase("DESCRIBE")
-      val ts = graft.sources.SessionViews.listTables(s)
+      val ts = graft.GraftSession(s).addedTables.list
       val rows = ts.map { t =>
         if (long)
           struct(lit(t.name).as("table"), lit(t.catalog).as("catalog"),
@@ -1948,7 +1945,7 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
       val s = spark()
       import org.apache.spark.sql.functions.explode_outer
       import org.apache.spark.sql.functions.{array, lit}
-      val addedRemote = graft.sources.SessionViews.listTables(s)
+      val addedRemote = graft.GraftSession(s).addedTables.list
         .filter(_.catalog == catalog).map(_.remote.toLowerCase).toSet
       val remaining = graft.sources.FederatedPushdown
         .remoteTables(s, catalog)
@@ -2557,12 +2554,12 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
         // models, index locations, and table key metadata are —
         // reference Processor.createIndex -> schema.addIndexLocation)
         val nv = graft.sources.DurableCatalog.saveViews(
-          graft.sources.SessionViews.listViews(s))
+          graft.GraftSession(s).views.list)
         val nm = graft.sources.DurableCatalog.saveModels(s)
         val ni = graft.sources.DurableCatalog.saveIndexes(
-          graft.sources.IndexRegistry.list(s))
+          graft.GraftSession(s).indexes.list)
         val nt = graft.sources.DurableCatalog.saveTableDefs(
-          graft.sources.TableMeta.list(s))
+          graft.GraftSession(s).tableDefs.list)
         Seq("saved", n.toString, nv.toString, nm.toString, ni.toString,
           nt.toString)
       }
@@ -2588,7 +2585,7 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
             org.apache.spark.sql.GraftBridge
               .ofRows(s, parsePlan(v.definition))
               .createOrReplaceTempView(v.name)
-            graft.sources.SessionViews.putView(s, v)
+            graft.GraftSession(s).views.put(v)
             loaded += 1
             progressed = true
             false
@@ -2597,13 +2594,13 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
       }
       val nm = graft.sources.DurableCatalog.loadModels(s)
       val idxs = graft.sources.DurableCatalog.loadIndexes()
-      idxs.foreach(graft.sources.IndexRegistry.put(s, _))
+      idxs.foreach(graft.GraftSession(s).indexes.put(_))
       // declared-schema tables: re-register the key metadata, and —
       // where the content parquet survived as a location — the table
       // view itself, so DESCRIBE TABLE and reads work post-restart
       val tdefs = graft.sources.DurableCatalog.loadTableDefs()
       tdefs.foreach { d =>
-        graft.sources.TableMeta.put(s, d)
+        graft.GraftSession(s).tableDefs.put(d)
         graft.sources.ExternalLocations.get(d.name).foreach { loc =>
           try loc.read(s).createOrReplaceTempView(d.name)
           catch { case scala.util.control.NonFatal(_) => () }

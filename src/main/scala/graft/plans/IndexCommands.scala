@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.StringType
 
-import graft.sources.IndexRegistry
+import graft.GraftSession
 
 /** GRAFT CREATE INDEX <name> ON <target> (<col>) — the unified index
   * statement (reference sql/statements/SqlStatement.scala:164-175:
@@ -34,7 +34,7 @@ case class CreateIndexCommand(name: String, target: String,
 
   override def run(spark: SparkSession): Seq[Row] = {
     require(keyCols.nonEmpty, "GRAFT CREATE INDEX: no columns")
-    require(IndexRegistry.get(spark, name).isEmpty,
+    require(GraftSession(spark).indexes.get(name).isEmpty,
       s"GRAFT CREATE INDEX: '$name' already exists")
     val keyList = keyCols.mkString(",")
     if (target.startsWith("'")) {
@@ -44,9 +44,8 @@ case class CreateIndexCommand(name: String, target: String,
       // re-expressed as the structure a lake layout supports)
       val mDirs = keyCols.map(c =>
         graft.sources.FileManifest.buildBloom(spark, path, c))
-      IndexRegistry.put(spark,
-        IndexRegistry.IndexDef(name, "bloom", path, keyList,
-          mDirs.mkString(",")))
+      GraftSession(spark).indexes.put(GraftSession.IndexDef(
+        name, "bloom", path, keyList, mDirs.mkString(",")))
       Seq(Row(name, "bloom", path, keyList, "created"))
     } else {
       val Array(catalog, table) = target.split("\\.", 2)
@@ -65,8 +64,8 @@ case class CreateIndexCommand(name: String, target: String,
             keyCols.map(c => s""""$c"""").mkString("(", ",", ")"))
         finally st.close()
       } finally conn.close()
-      IndexRegistry.put(spark,
-        IndexRegistry.IndexDef(name, "remote", target, keyList, catalog))
+      GraftSession(spark).indexes.put(GraftSession.IndexDef(
+        name, "remote", target, keyList, catalog))
       Seq(Row(name, "remote", target, keyList, "created"))
     }
   }
@@ -82,7 +81,7 @@ case class DropIndexCommand(name: String) extends LeafRunnableCommand {
     AttributeReference("status", StringType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] =
-    IndexRegistry.get(spark, name) match {
+    GraftSession(spark).indexes.get(name) match {
       case None => Seq(Row(name, "absent"))
       case Some(d) =>
         if (d.kind == "bloom") {
@@ -105,7 +104,7 @@ case class DropIndexCommand(name: String) extends LeafRunnableCommand {
             finally st.close()
           } finally conn.close()
         }
-        IndexRegistry.drop(spark, name)
+        GraftSession(spark).indexes.drop(name)
         Seq(Row(name, "dropped"))
     }
 }

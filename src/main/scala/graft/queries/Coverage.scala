@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.{TextFunctions => TF}
 import graft.operators.ExtendedOps
 
@@ -354,17 +354,17 @@ object Coverage {
     // with the conf-gated rewrite forced on and REQUIRED to have fired
     // (the optimized plan must carry the bucket-expansion marker) —
     // results must equal DuckDB's own theta join, proving the rule
-    // transparent. The conf is scoped to this query: the plan is
-    // pinned while it's on, then the key unsets.
-    "q435_range_rewrite_sql" -> { (spark, dir) =>
-      val t = Tables(spark, dir)
-      import spark.implicits._
-      val bands = Seq(
-        (1, 0.0, 50000.0), (2, 50000.0, 100000.0),
-        (3, 100000.0, 200000.0), (4, 200000.0, 400000.0),
-        (5, 400000.0, 600000.0)).toDF("band_id", "lo", "hi")
-      spark.conf.set(graft.plans.RangeJoinRewrite.WidthKey, "25000.0")
-      try {
+    // transparent. The conf is scoped to this query: it is built in a
+    // child session holding the key, so the caller's conf is untouched.
+    "q435_range_rewrite_sql" -> { (caller, dir) =>
+      GraftSession.isolated(caller,
+          graft.plans.RangeJoinRewrite.WidthKey -> "25000.0") { spark =>
+        val t = Tables(spark, dir)
+        import spark.implicits._
+        val bands = Seq(
+          (1, 0.0, 50000.0), (2, 50000.0, 100000.0),
+          (3, 100000.0, 200000.0), (4, 200000.0, 400000.0),
+          (5, 400000.0, 600000.0)).toDF("band_id", "lo", "hi")
         val df = t.orders.select(col("o_orderkey"), col("o_totalprice"))
           .join(bands, col("o_totalprice") >= col("lo") &&
             col("o_totalprice") < col("hi"))
@@ -375,25 +375,24 @@ object Coverage {
           .orderBy(col("band_id"))
         require(df.queryExecution.optimizedPlan.toString
           .contains("_graft_pb"), "range-join rewrite did not fire")
-        df.queryExecution.executedPlan // pin the plan under the conf
         df
-      } finally spark.conf
-        .unset(graft.plans.RangeJoinRewrite.WidthKey)
+      }
     },
 
     // The injected band-join OPTIMIZER RULE behind the oracle gate:
     // a keyed interval join written as a plain `k = k AND lo <= t
     // AND t < hi` DataFrame join, rewrite forced on and required to
     // have swapped in the BandJoin sweep; oracle = DuckDB's own join.
-    "q436_band_rewrite_sql" -> { (spark, dir) =>
-      val t = Tables(spark, dir)
-      val pts = t.lineitem.select(col("l_suppkey").as("k"),
-        col("l_extendedprice").as("tv"), col("l_orderkey"))
-      val iv = t.supplier.select(col("s_suppkey").as("k2"),
-        (col("s_acctbal") * 10).as("lo"),
-        (col("s_acctbal") * 10 + 50000).as("hi"))
-      spark.conf.set(graft.plans.BandJoinRewrite.EnabledKey, "true")
-      try {
+    // Built in a child session holding the key (as q435).
+    "q436_band_rewrite_sql" -> { (caller, dir) =>
+      GraftSession.isolated(caller,
+          graft.plans.BandJoinRewrite.EnabledKey -> "true") { spark =>
+        val t = Tables(spark, dir)
+        val pts = t.lineitem.select(col("l_suppkey").as("k"),
+          col("l_extendedprice").as("tv"), col("l_orderkey"))
+        val iv = t.supplier.select(col("s_suppkey").as("k2"),
+          (col("s_acctbal") * 10).as("lo"),
+          (col("s_acctbal") * 10 + 50000).as("hi"))
         val df = pts.join(iv, col("k") === col("k2") &&
             col("tv") >= col("lo") && col("tv") < col("hi"))
           .groupBy(col("k"))
@@ -403,10 +402,8 @@ object Coverage {
           .orderBy(col("k"))
         require(df.queryExecution.optimizedPlan.toString
           .contains("BandJoin"), "band-join rewrite did not fire")
-        df.queryExecution.executedPlan // pin the plan under the conf
         df
-      } finally spark.conf
-        .unset(graft.plans.BandJoinRewrite.EnabledKey)
+      }
     },
 
     // Skew-resistant salted join: lineitem's 3-value returnflag key is

@@ -2,11 +2,12 @@ package graft.queries
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.{TextFunctions => TF}
 import graft.streaming.{EventStreams, StreamDedup, StreamingAnn,
   StreamingAsOf, StreamingCusum, StreamingEwma, StreamingIndexer,
@@ -37,27 +38,24 @@ object StreamingOracle {
 
   private val sinkId = new AtomicLong(0L)
 
-  /** Scale-adaptive state/shuffle partition hint per session, set by
-    * the stream-source helpers from the SOURCE SIZE (AQE cannot
-    * coalesce stateful streaming shuffles, so a drain otherwise runs
-    * `spark.sql.shuffle.partitions` state stores per operator per
-    * micro-batch — each one a per-batch file commit, pure fixed cost
-    * when the state is far smaller than the partition count; guide
-    * §2: derive partitioning from input size, not a cluster-width
-    * constant). The hint is ceil(sourceBytes / advisoryPartitionSize)
-    * clamped to [1, session shuffle partitions] — the same sizing
-    * rule AQE applies to batch shuffles — overridable for production
-    * via `spark.graft.stream.shufflePartitions`. */
-  private val partsHint =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, Integer]()
-
-  private def hintParts(spark: SparkSession, path: String): Unit = {
-    val want = spark.conf
+  /** State/shuffle partitions for a drain over `path` (a glob is
+    * summed over its matches). AQE cannot coalesce stateful streaming
+    * shuffles, so a drain otherwise runs `spark.sql.shuffle.partitions`
+    * state stores per operator per micro-batch — each one a per-batch
+    * file commit, pure fixed cost when the state is far smaller than
+    * the partition count (guide §2: derive partitioning from input
+    * size, not a cluster-width constant). The count is
+    * ceil(sourceBytes / advisoryPartitionSize) clamped to [1, session
+    * shuffle partitions] — the sizing rule AQE applies to batch
+    * shuffles — overridable via `spark.graft.stream.shufflePartitions`. */
+  private def hintParts(spark: SparkSession, path: String): Int =
+    spark.conf
       .getOption("spark.graft.stream.shufflePartitions").map(_.toInt)
       .getOrElse {
         val p = new org.apache.hadoop.fs.Path(path)
         val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        val bytes = fs.getContentSummary(p).getLength
+        val bytes = Option(fs.globStatus(p)).toSeq.flatten
+          .map(st => fs.getContentSummary(st.getPath).getLength).sum
         val advisory = spark.sessionState.conf.getConf(
           org.apache.spark.sql.internal.SQLConf
             .ADVISORY_PARTITION_SIZE_IN_BYTES)
@@ -65,78 +63,49 @@ object StreamingOracle {
           spark.sessionState.conf.numShufflePartitions.toLong,
           (bytes + advisory - 1) / advisory)).toInt
       }
-    // several sources in one query: size state by the largest
-    partsHint.merge(spark, Int.box(want),
-      (a, b) => Int.box(math.max(a, b)))
-  }
 
-  /** Raise the pending hint to at least `n` (clamped to the session
-    * parallelism). The RocksDB/transformWithState lanes want this:
-    * their per-row state point-ops are CPU-bound and parallelize,
-    * unlike the HDFS-backed lanes whose per-partition file commit is
-    * the fixed cost (measured: q399 5.2s at 1 partition -> 3.1s at
-    * 4). */
-  private def floorHint(spark: SparkSession, n: Int): Unit =
-    partsHint.merge(spark,
-      Int.box(math.min(n, spark.sessionState.conf.numShufflePartitions)),
-      (a, b) => Int.box(math.max(a, b)))
-
-  /** Run `body` with the RocksDB state store provider AND changelog
-    * checkpointing (commit fsyncs the per-batch changelog instead of
-    * a full RocksDB snapshot — the production-recommended commit path
-    * for large state, and the cheaper one for these ephemeral drain
-    * checkpoints; local A/B on q399: medians 4.9 s -> 3.9 s pass-2
-    * across 3+3 runs, fsync-weather noisy but never worse). Both
-    * confs are saved and restored so batch queries and the
-    * HDFS-backed lanes are untouched. */
-  private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val keys = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        ("org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider"),
-      ("spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled") -> "true")
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  /** Per-session monitor for the drain's temporary
-    * shuffle-partitions mutation: the save/mutate/drain/restore
-    * sequence must be atomic per session, or two concurrent drains
-    * (or a drain racing a batch query that reads the conf) observe
-    * each other's partition override. The registry runs sequentially
-    * in bench/verify, so the lock is uncontended there. */
-  private val drainLocks =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, Object]()
+  /** The RocksDB state store provider with changelog checkpointing
+    * (commit fsyncs the per-batch changelog instead of a full RocksDB
+    * snapshot — the production-recommended commit path for large
+    * state, and the cheaper one for these ephemeral drain checkpoints;
+    * local A/B on q399: medians 4.9 s -> 3.9 s pass-2 across 3+3 runs,
+    * fsync-weather noisy but never worse). */
+  private val RocksDb = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      ("org.apache.spark.sql.execution.streaming." +
+        "state.RocksDBStateStoreProvider"),
+    ("spark.sql.streaming.stateStore.rocksdb." +
+      "changelogCheckpointing.enabled") -> "true")
 
   /** Start `ds` into a fresh memory sink, drain all available input,
-    * and hand back the sink table. State partitioning follows the
-    * source-size hint (fresh per-drain checkpoints, so the partition
-    * count is free to differ per drain); the session conf is restored
-    * after the drain so batch queries are untouched. The hint map is
-    * consumed (removed) at entry, so a stream that was constructed
-    * but never drained cannot leak its hint past this drain. */
-  private def drain[T](ds: Dataset[T], mode: String): DataFrame = {
+    * and hand back the sink table in the caller's session. The query
+    * runs in a child session (`GraftSession.isolated`), so its conf
+    * never touches the caller's. State partitioning follows the size
+    * of the stream's file sources (fresh per-drain checkpoints, so
+    * the count is free to differ per drain), raised to `minParts`
+    * (clamped to the session parallelism) for lanes whose per-row
+    * state work is CPU-bound and parallelizes, unlike the HDFS-backed
+    * lanes whose per-partition file commit is the fixed cost
+    * (measured: q399 5.2s at 1 partition -> 3.1s at 4). `rocksDb`
+    * selects the RocksDB provider above. */
+  private def drain(ds: Dataset[_], mode: String, minParts: Int = 1,
+      rocksDb: Boolean = false): DataFrame = {
     val spark = ds.sparkSession
-    val name = s"graft_stream_oracle_${sinkId.incrementAndGet()}"
-    val lock = drainLocks.computeIfAbsent(spark, _ => new Object)
-    lock.synchronized {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      val hint = Option(partsHint.remove(spark))
-      hint.foreach(h =>
-        spark.conf.set("spark.sql.shuffle.partitions", h.toString))
-      try {
-        val q = ds.writeStream.outputMode(mode)
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-      } finally hint.foreach(_ =>
-        spark.conf.set("spark.sql.shuffle.partitions", prev))
+    val plan = ds.queryExecution.analyzed
+    val parts = plan.collect { case r: StreamingRelation =>
+      (r.dataSource.paths ++ r.dataSource.options.get("path"))
+        .map(hintParts(spark, _))
+    }.flatten :+
+      math.min(minParts, spark.sessionState.conf.numShufflePartitions)
+    val confs = ("spark.sql.shuffle.partitions" -> parts.max.toString) +:
+      (if (rocksDb) RocksDb else Nil)
+    GraftSession.isolated(spark, confs: _*) { child =>
+      val name = s"graft_stream_oracle_${sinkId.incrementAndGet()}"
+      val q = GraftBridge.ofRows(child, plan).writeStream
+        .outputMode(mode).format("memory").queryName(name).start()
+      try q.processAllAvailable() finally q.stop()
+      GraftBridge.ofRows(spark, child.table(name).queryExecution.analyzed)
     }
-    spark.table(name)
   }
 
   /** The file stream source needs a DIRECTORY; the test corpus ships
@@ -144,11 +113,8 @@ object StreamingOracle {
     * under the CacheFs root (Hadoop FileSystem end to end, so the
     * stage works when corpus and cache live on HDFS/S3) — all five
     * drains and every bench pass then share the one staged copy. */
-  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stagedTable(spark, dir, "events")
-    hintParts(spark, staged)
-    EventStreams.readEvents(spark, staged)
-  }
+  private def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    EventStreams.readEvents(spark, stagedTable(spark, dir, "events"))
 
   /** The file stream source's unit is a DIRECTORY: a table that is
     * already a parquet directory (Spark-written layouts, the scale
@@ -184,7 +150,6 @@ object StreamingOracle {
   private def tableStream(spark: SparkSession, dir: String,
       table: String): DataFrame = {
     val staged = stagedTable(spark, dir, table)
-    hintParts(spark, staged)
     val schema = spark.read.parquet(staged).schema
     spark.readStream.schema(schema).parquet(staged)
   }
@@ -263,8 +228,7 @@ object StreamingOracle {
       // stateful stage is CPU-bound and parallelizes (r12 A/B,
       // best-of-two: 2.05s at the 1-partition byte hint -> 1.58s at
       // 4) — same floor discipline as the RocksDB lanes
-      floorHint(spark, 4)
-      drain(StreamingMarkov.transitions(ev), "append")
+      drain(StreamingMarkov.transitions(ev), "append", minParts = 4)
         .groupBy(col("from_type"), col("to_type"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("from_type"), col("to_type"))
@@ -276,10 +240,10 @@ object StreamingOracle {
     // ordering contract at all.
     "q394_stream_nb_model" -> { (spark, dir) =>
       val ev = eventsStream(spark, dir)
-      floorHint(spark, 4) // r12 A/B: 1.24s at hint 1 -> 1.07s at 4
+      // r12 A/B: 1.24s at hint 1 -> 1.07s at 4
       drain(StreamingNaiveBayes.model(
         StreamingNaiveBayes.observations(ev)),
-        "update")
+        "update", minParts = 4)
         .select(col("label"), col("n_l"), col("feature"), col("value"),
           col("n"))
         .orderBy(col("label"), col("feature"), col("value"))
@@ -293,8 +257,9 @@ object StreamingOracle {
     "q395_stream_windowdedup_final" -> { (spark, dir) =>
       val docs = tableStream(spark, dir, "documents")
       // per-row window hashing is the cost, not state commits
-      floorHint(spark, 4) // r12 A/B: 1.91s at hint 1 -> 1.33s at 4
-      drain(StreamingWindowDedup.dupSpans(docs, "text"), "append")
+      // (r12 A/B: 1.91s at hint 1 -> 1.33s at 4)
+      drain(StreamingWindowDedup.dupSpans(docs, "text"), "append",
+        minParts = 4)
         .select(col("h"), col("dup_doc"), col("occ"))
         .orderBy(col("h"), col("dup_doc"))
     },
@@ -306,9 +271,9 @@ object StreamingOracle {
     // derivation q75/q227 use, minus the per-label aggregates.
     "q396_stream_match_final" -> { (spark, dir) =>
       val ev = eventsStream(spark, dir)
-      floorHint(spark, 4) // r12 A/B: 1.28s at hint 1 -> 1.16s at 4
+      // r12 A/B: 1.28s at hint 1 -> 1.16s at 4
       drain(StreamingMatch.matches(
-        ev, "click view* purchase"), "append")
+        ev, "click view* purchase"), "append", minParts = 4)
         .select(col("user_id"), col("match_id"), col("n_rows"),
           col("first_ord"), col("last_ord"), col("path"))
         .orderBy(col("user_id"), col("match_id"))
@@ -352,12 +317,10 @@ object StreamingOracle {
     // table — equal to the batch SeqPatternOps derivation, which is
     // q291's oracle.
     "q399_stream_seqpat_final" -> { (spark, dir) =>
-      withRocksDb(spark) {
-        val ev = eventsStream(spark, dir)
-        floorHint(spark, 4)
-        val emitted = drain(StreamingSeqPatterns.firstLast(ev), "update")
-        StreamingSeqPatterns.supportsFromEmissions(emitted)
-      }
+      val emitted = drain(
+        StreamingSeqPatterns.firstLast(eventsStream(spark, dir)),
+        "update", minParts = 4, rocksDb = true)
+      StreamingSeqPatterns.supportsFromEmissions(emitted)
     },
 
     // Streaming ALIGN / as-of join: each purchase joined to the
@@ -366,8 +329,9 @@ object StreamingOracle {
     // over the same (ts, side, event_id) order.
     "q400_stream_asof_final" -> { (spark, dir) =>
       val ev = eventsStream(spark, dir)
-      floorHint(spark, 4) // r12 A/B: 1.28s at hint 1 -> 1.19s at 4
-      drain(StreamingAsOf.asof(ev, "purchase", "click"), "append")
+      // r12 A/B: 1.28s at hint 1 -> 1.19s at 4
+      drain(StreamingAsOf.asof(ev, "purchase", "click"), "append",
+        minParts = 4)
         .select(col("user_id"), col("event_id"), col("ts"),
           col("ref_event_id"), col("ref_value"))
         .orderBy(col("user_id"), col("event_id"))
@@ -412,11 +376,12 @@ object StreamingOracle {
     // first-view / first-click-after / any-purchase-after chain.
     "q416_stream_funnel_final" -> { (spark, dir) =>
       val ev = eventsStream(spark, dir)
-      floorHint(spark, 4) // r12 A/B: 1.83s at hint 1 -> 1.64s at 4
+      // r12 A/B: 1.83s at hint 1 -> 1.64s at 4
       drain(StreamingMatch.matches(
           ev,
           "view (view|error|signup|purchase)* click " +
-            "(view|click|error|signup)* purchase"), "append")
+            "(view|click|error|signup)* purchase"), "append",
+        minParts = 4)
         .select(col("user_id")).distinct()
         .orderBy(col("user_id"))
     },
@@ -431,10 +396,10 @@ object StreamingOracle {
     "q404_stream_lsh_final" -> { (spark, dir) =>
       val docs = tableStream(spark, dir, "documents")
       // minhash signature computation is the per-row cost
-      floorHint(spark, 4) // r12 A/B: 1.99s at hint 1 -> 1.69s at 4
+      // (r12 A/B: 1.99s at hint 1 -> 1.69s at 4)
       drain(StreamingLshDedup.candidates(
           docs, "text",
-          k = 16, bands = 4, maxBucket = 50), "append")
+          k = 16, bands = 4, maxBucket = 50), "append", minParts = 4)
         .select(col("doc_a"), col("doc_b")).distinct()
         .orderBy(col("doc_a"), col("doc_b"))
     },
@@ -450,16 +415,16 @@ object StreamingOracle {
         spark, s"$dir/events.parquet")
       val tag = s"stream_sess_${graft.sources.CacheFs.AlgoVersion}_$fp"
       val out = graft.sources.CacheFs.getOrBuild(spark, tag) { stage =>
-        withRocksDb(spark) {
+        GraftSession.isolated(spark, RocksDb: _*) { child =>
           val sentinelUser = 999999999L
-          val ev = Tables(spark, dir).events
+          val ev = Tables(child, dir).events
             .select(col("user_id"),
               col("ts").cast("timestamp_ntz").as("ts"))
           ev.write.parquet(s"$stage/src")
-          val maxTs = Tables(spark, dir).events
+          val maxTs = Tables(child, dir).events
             .agg(max(col("ts"))).collect()(0).getTimestamp(0)
           def sentinel(offsetDays: Int) = {
-            import spark.implicits._
+            import child.implicits._
             Seq((sentinelUser, new java.sql.Timestamp(
                 maxTs.getTime + offsetDays * 86400000L)))
               .toDF("user_id", "ts")
@@ -469,7 +434,7 @@ object StreamingOracle {
           val name = "graft_sess_drain_" +
             java.util.UUID.randomUUID.toString.take(8)
           val q = StreamingSessionTimers.sessions(
-              EventStreams.readEvents(spark, s"$stage/src"),
+              EventStreams.readEvents(child, s"$stage/src"),
               gapMinutes = 30)
             .writeStream.outputMode("append")
             .format("memory").queryName(name).start()
@@ -483,12 +448,11 @@ object StreamingOracle {
             sentinel(20).write.mode("append").parquet(s"$stage/src")
             q.processAllAvailable()
           } finally q.stop()
-          spark.table(name)
+          child.table(name)
             .where(col("user_id") =!= sentinelUser)
             .select(col("user_id"), col("session_start"),
               col("session_end"), col("n_events"))
             .write.parquet(s"$stage/out")
-          spark.catalog.dropTempView(name)
           // the staged source copy (+ checkpoint) served its purpose;
           // only the drained session table is the artifact
           val srcPath = new org.apache.hadoop.fs.Path(s"$stage/src")
@@ -625,7 +589,6 @@ object StreamingOracle {
         }
         graft.sources.CacheFs.touch(spark, stage)
       }
-      hintParts(spark, staged)
       val stream = spark.readStream.schema(t.events.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$staged/p*")
@@ -652,7 +615,7 @@ object StreamingOracle {
     // batch q142 rank derivation, whose oracle applies verbatim.
     "q429_stream_ohlc_final" -> { (spark, dir) =>
       val ev = eventsStream(spark, dir)
-      floorHint(spark, 4) // r12 A/B: 2.38s at hint 1 -> 2.14s at 4
+      // r12 A/B: 2.38s at hint 1 -> 2.14s at 4
       drain(ev
         .withWatermark("ts", "2 hours")
         .groupBy(col("user_id"), window(col("ts"), "1 hour").as("w"))
@@ -666,7 +629,8 @@ object StreamingOracle {
           count(lit(1)).as("n"))
         .where(col("n") >= 2)
         .select(col("user_id"), col("w.start").as("hr"), col("open"),
-          col("high"), col("low"), col("close"), col("n")), "complete")
+          col("high"), col("low"), col("close"), col("n")), "complete",
+        minParts = 4)
         .orderBy(col("user_id"), col("hr"))
     },
 

@@ -4,6 +4,8 @@ import java.sql.DriverManager
 
 import org.apache.spark.sql.types.StructType
 
+import graft.GraftSession
+
 /** Durable catalog over embedded Derby (reference parity: sclera
   * persists every object definition — locations, tables, ML objects —
   * in an embedded metadata store, modules/core/src/main/scala/objects
@@ -155,7 +157,7 @@ object DurableCatalog {
   /** Persist the NON-TEMP view definitions (sclera parity: TEMP
     * objects are session-lifetime by definition and never durable).
     * Replaces the stored set atomically. */
-  def saveViews(views: Seq[SessionViews.ViewDef]): Int = withConn { c =>
+  def saveViews(views: Seq[GraftSession.ViewDef]): Int = withConn { c =>
     ensureViewTable(c)
     c.setAutoCommit(false)
     val del = c.createStatement()
@@ -179,13 +181,13 @@ object DurableCatalog {
     * re-parses each definition and re-registers the temp view — the
     * parser cannot be invoked from here without inverting the
     * package dependency. */
-  def loadViews(): Seq[SessionViews.ViewDef] = withConn { c =>
+  def loadViews(): Seq[GraftSession.ViewDef] = withConn { c =>
     ensureViewTable(c)
     val st = c.createStatement()
     val rs = st.executeQuery("SELECT name, def FROM graft_views")
-    val out = Seq.newBuilder[SessionViews.ViewDef]
+    val out = Seq.newBuilder[GraftSession.ViewDef]
     while (rs.next()) {
-      out += SessionViews.ViewDef(
+      out += GraftSession.ViewDef(
         rs.getString(1), rs.getString(2), temp = false)
     }
     rs.close(); st.close()
@@ -243,7 +245,7 @@ object DurableCatalog {
     * too, or a restart orphans them: LIST INDEXES goes empty, DROP
     * reports 'absent' and leaks the manifest, re-CREATE hits the
     * vendor's 'already exists'). Replaces the stored set. */
-  def saveIndexes(defs: Seq[IndexRegistry.IndexDef]): Int = withConn { c =>
+  def saveIndexes(defs: Seq[GraftSession.IndexDef]): Int = withConn { c =>
     ensureIndexTable(c)
     c.setAutoCommit(false)
     val del = c.createStatement()
@@ -265,14 +267,14 @@ object DurableCatalog {
   }
 
   /** The stored index definitions (LOAD CATALOG re-registers them). */
-  def loadIndexes(): Seq[IndexRegistry.IndexDef] = withConn { c =>
+  def loadIndexes(): Seq[GraftSession.IndexDef] = withConn { c =>
     ensureIndexTable(c)
     val st = c.createStatement()
     val rs = st.executeQuery(
       "SELECT name, kind, target, keycol, detail FROM graft_indexes")
-    val out = Seq.newBuilder[IndexRegistry.IndexDef]
+    val out = Seq.newBuilder[GraftSession.IndexDef]
     while (rs.next()) {
-      out += IndexRegistry.IndexDef(rs.getString(1), rs.getString(2),
+      out += GraftSession.IndexDef(rs.getString(1), rs.getString(2),
         rs.getString(3), rs.getString(4), rs.getString(5))
     }
     rs.close(); st.close()
@@ -299,7 +301,7 @@ object DurableCatalog {
     * content survives as an ExternalLocation). Replaces the stored
     * set. Encoding: `name:type:key` per column, URL-escaped fields,
     * `;`-joined. */
-  def saveTableDefs(defs: Seq[TableMeta.TableDef]): Int = withConn { c =>
+  def saveTableDefs(defs: Seq[GraftSession.TableDef]): Int = withConn { c =>
     ensureTableDefTable(c)
     c.setAutoCommit(false)
     val del = c.createStatement()
@@ -323,18 +325,18 @@ object DurableCatalog {
   /** The stored declared-schema table definitions (LOAD CATALOG
     * re-registers the metadata and, where the table's content parquet
     * survives as a location, the table itself). */
-  def loadTableDefs(): Seq[TableMeta.TableDef] = withConn { c =>
+  def loadTableDefs(): Seq[GraftSession.TableDef] = withConn { c =>
     ensureTableDefTable(c)
     val st = c.createStatement()
     val rs = st.executeQuery("SELECT name, defs FROM graft_tabledefs")
-    val out = Seq.newBuilder[TableMeta.TableDef]
+    val out = Seq.newBuilder[GraftSession.TableDef]
     while (rs.next()) {
       val cols = rs.getString(2).split(";", -1).toSeq
         .filter(_.nonEmpty).map { item =>
           val Array(n, t, k) = item.split(":", 3)
-          TableMeta.ColumnDef(dec(n), dec(t), dec(k))
+          GraftSession.ColumnDef(dec(n), dec(t), dec(k))
         }
-      out += TableMeta.TableDef(rs.getString(1), cols)
+      out += GraftSession.TableDef(rs.getString(1), cols)
     }
     rs.close(); st.close()
     out.result().sortBy(_.name)
@@ -445,7 +447,7 @@ object DurableCatalog {
   /** Re-register every stored model: the frame reads back from its
     * versioned parquet, persists eagerly (scoring must not re-read
     * per use, the CREATE-statement contract), and re-enters the
-    * session registry + ModelCache. */
+    * session as its `graft_model_<name>` view. */
   def loadModels(spark: org.apache.spark.sql.SparkSession): Int =
     withConn { c =>
       ensureModelTable(c)
@@ -457,7 +459,6 @@ object DurableCatalog {
         val df = spark.read.parquet(rs.getString(2)).persist()
         df.count()
         df.createOrReplaceTempView(s"graft_model_$name")
-        graft.operators.ModelCache.put(spark, name, df)
         n += 1
       }
       rs.close(); st.close()

@@ -53,5 +53,15 @@ class CacheHygieneSpec extends AnyFunSuite {
     spark.sql("GRAFT DROP CLUSTERER hyg_m").collect()
     val left = newPersistent(before)
     assert(left.isEmpty, s"model cache survived DROP: RDD ids $left")
+
+    // re-create under the same name: the replaced view's cache entry
+    // must go on replace, and the live one on DROP
+    for (_ <- 1 to 2) spark.sql(
+      "GRAFT CREATE CLASSIFIER hyg_c TARGET label ON hyg_emb").collect()
+    spark.sql("SELECT * FROM graft_model_hyg_c").count()
+    spark.sql("GRAFT DROP CLASSIFIER hyg_c").collect()
+    val leftTwice = newPersistent(before)
+    assert(leftTwice.isEmpty,
+      s"re-created model cache survived DROP: RDD ids $leftTwice")
   }
 }

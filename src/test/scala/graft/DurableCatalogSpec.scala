@@ -177,7 +177,7 @@ class DurableCatalogSpec extends AnyFunSuite {
     assert(saved.getAs[String]("n_indexes").toInt >= 1)
     // simulate a fresh process: the session registry forgets, the
     // Bloom manifest on disk does not
-    IndexRegistry.drop(spark, "dc_idx")
+    GraftSession(spark).indexes.drop("dc_idx")
     assert(spark.sql("GRAFT LIST INDEXES")
       .where(org.apache.spark.sql.functions.col("index_name") === "dc_idx")
       .count() == 0)

@@ -60,4 +60,10 @@ class LogisticSpec extends AnyFunSuite {
     assert(w.sameElements(w2) && b == b2,
       "training result depends on partitioning")
   }
+
+  test("empty training input fails with a clear message, not an NPE") {
+    val e = intercept[IllegalArgumentException](
+      MLOps.logisticTrain(dataset().limit(0), "feat", "y", 2, 5.0))
+    assert(e.getMessage.contains("no training rows"))
+  }
 }

@@ -50,4 +50,12 @@ class QuantileOpsSpec extends AnyFunSuite {
     assert(out.map(_.getString(0)).toSeq == Seq("a"))
     assert(out.head.getDouble(1) == 1.0) // 100.0 never leaked into a
   }
+
+  test("a p outside (0, 1] fails at the call, not as a NULL pick") {
+    val df = Seq(("a", 1.0), ("a", 2.0)).toDF("g", "v")
+    Seq(0.0, -0.5, 1.5).foreach { p =>
+      intercept[IllegalArgumentException](
+        QuantileOps.percentileDisc(df, "g", "v", Seq("p" -> p)))
+    }
+  }
 }

@@ -61,17 +61,17 @@ class TableDdlSpec extends AnyFunSuite {
     // DROP TABLE clears the declared metadata too
     spark.sql("GRAFT DROP TABLE ddl_ctas").collect()
     assert(
-      graft.sources.TableMeta.get(spark, "ddl_ctas").isEmpty)
+      graft.GraftSession(spark).tableDefs.get("ddl_ctas").isEmpty)
   }
 
   test("re-creating a name via CTAS/VIEW clears declared metadata") {
     Tables(spark, sfDir).registerAll()
     spark.sql("GRAFT CREATE TABLE meta_t (k INT PRIMARY KEY)").collect()
-    assert(graft.sources.TableMeta.get(spark, "meta_t").isDefined)
+    assert(graft.GraftSession(spark).tableDefs.get("meta_t").isDefined)
     // plain TEMP CTAS under the same name: the declared schema is gone
     spark.sql("GRAFT CREATE TEMP TABLE meta_t AS " +
       "SELECT r_regionkey AS a, r_name AS b FROM region").collect()
-    assert(graft.sources.TableMeta.get(spark, "meta_t").isEmpty)
+    assert(graft.GraftSession(spark).tableDefs.get("meta_t").isEmpty)
     // DESCRIBE TABLE now renders the LIVE schema, not the stale keys
     val desc = spark.sql("GRAFT DESCRIBE TABLE meta_t").collect()
       .map(r => (r.getString(0), r.getString(2))).toSeq
@@ -222,7 +222,7 @@ class TableDdlSpec extends AnyFunSuite {
     assert(saved.getAs[String]("n_tabledefs").toInt >= 1)
     // simulate a fresh process: drop the session registrations
     spark.catalog.dropTempView("ddl_dur")
-    graft.sources.TableMeta.drop(spark, "ddl_dur")
+    graft.GraftSession(spark).tableDefs.drop("ddl_dur")
     graft.sources.ExternalLocations.remove("ddl_dur")
     val loaded = spark.sql("GRAFT LOAD CATALOG").head()
     assert(loaded.getAs[String]("n_tabledefs").toInt >= 1)
